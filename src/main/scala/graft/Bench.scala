@@ -257,8 +257,8 @@ object Bench {
     // as REQUESTED (the env contract value); a non-numeric override (e.g.
     // "*") must not produce invalid JSON
     val effPar = spark.sparkContext.defaultParallelism
-    val cpusJson = scala.util.Try(cpus.trim.toInt).toOption
-      .map(_.toString).getOrElse("\"" + cpus + "\"")
+    val cpusJson = scala.util.Try(cpus.trim.toInt).toOption.map(_.toString)
+      .getOrElse(org.json4s.jackson.JsonMethods.compact(org.json4s.JString(cpus)))
     val scalingJson =
       f""""cpus":$cpusJson,"effective_parallelism":$effPar,"scaling_probe":$probe"""
     // FULL per-query map (240+ entries, ~7 KB) goes to a FILE: the driver

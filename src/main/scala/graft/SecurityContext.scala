@@ -1,18 +1,28 @@
 package graft
 
 import graft.functions.MaskFunctions
-import graft.plans.{DataMaskRule, DmlSecurityRewrite, RowFilterRule, TableScope}
+import graft.plans.{ColumnDenyCheck, DataMaskRule, DmlSecurityRewrite, RowFilterRule, SecurityTags, TableScope}
 import graft.policy.PolicyManager
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.StructType
 
-/** One audit record: a query submission (action QUERY, obj = which rewrite
-  * API, detail = the statement) or a policy application the rewrite
-  * performed (action ROW_FILTER / DATA_MASK, obj = cat.db.table, detail =
-  * the injected condition / the col=MASK_TYPE list). `seq` is the call
-  * order — deterministic for a fresh context.
+/** One audit record. Actions, each with its `obj` and `detail`:
+  *  - QUERY: a submission; obj = the entry point (`row_filter`,
+  *    `data_mask`, `mixed`, `mixed_raw_filter`, `dml`), detail = the
+  *    statement. It precedes the decision rows it caused.
+  *  - ROW_FILTER: an injected row filter; obj = cat.db.table, detail = the
+  *    condition (AND-ed when several match). On the DML target the detail
+  *    ends in ` (DML target constraint)`.
+  *  - ROW_DENY: a [[graft.policy.DenyRowPolicy]] decision; detail = `DENY`.
+  *  - DATA_MASK: a mask decision; detail = the `col=MASK_TYPE` list,
+  *    identity-only matches (`col=MASK_NONE`) included.
+  *  - COLUMN_DENY: a query failed closed on denied columns; detail = the
+  *    denied columns it referenced.
+  * `seq` is the call order — deterministic for a fresh context. Only the
+  * [[SecurityContext]] API writes audit rows; queries enforced by
+  * [[graft.plans.GraftSecurityExtensions]] write none yet (ROADMAP item 3).
   */
 case class AuditEntry(seq: Long, principal: String, action: String,
     obj: String, detail: String)
@@ -24,6 +34,17 @@ case class AuditEntry(seq: Long, principal: String, action: String,
   * audit trail (action COLUMN_DENY) before the throw.
   */
 class ColumnAccessDeniedException(message: String) extends RuntimeException(message)
+
+object ColumnAccessDeniedException {
+  /** The column-deny failure for `user`'s `statement` ("query", "DML
+    * statement"): one `cat.db.table.(cols)` entry per violating table.
+    */
+  def columns(user: String, violations: Seq[(String, Seq[String])],
+      statement: String = "query"): ColumnAccessDeniedException =
+    new ColumnAccessDeniedException(s"user '$user' is denied column(s) " +
+      violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
+      s" — the $statement references them and fails closed")
+}
 
 /** User-facing facade — the Spark-native equivalent of the reference's
   * SecurityContext (SecurityContext.java:126-242).
@@ -78,39 +99,32 @@ final class SecurityContext(
 
   private val auditBuf = scala.collection.mutable.ArrayBuffer.empty[AuditEntry]
 
-  /** Record the submission plus every policy application found in the
-    * rewritten plan (the rules leave `SecurityTags.*Audit` breadcrumbs at
-    * each injection site; collectWithSubqueries also reaches plans inside
-    * EXISTS/IN/scalar subquery expressions), plus any identity-only mask
-    * decisions the rule reported out-of-band (MASK_NONE-only scans build no
-    * Project to tag — [[graft.plans.DataMaskRule.identityAudit]]); those
-    * follow the plan-collected rows. Driver-side, bounded by the number of
-    * policied scans in the plan — never data-sized. Appends take one
-    * monitor so concurrent rewrites through a shared context cannot corrupt
-    * the buffer or duplicate seq values (seq derives from size at append).
+  /** Append a submission's QUERY row, then its decisions — (action,
+    * "obj|detail") pairs. Driver-side, bounded by the number of policied
+    * scans in the plan — never data-sized. Appends take one monitor so
+    * concurrent rewrites through a shared context cannot corrupt the buffer
+    * or duplicate seq values (seq derives from size at append).
     */
-  private def recordAudit(user: String, api: String, sql: String,
-      plan: LogicalPlan, identityMasks: Seq[String] = Nil): LogicalPlan = {
-    val decisions = plan.collectWithSubqueries {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).isDefined =>
-        ("ROW_FILTER", f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).get)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowDenyAudit).isDefined =>
-        ("ROW_DENY", f.getTagValue(graft.plans.SecurityTags.RowDenyAudit).get)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project
-          if p.getTagValue(graft.plans.SecurityTags.MaskAudit).isDefined =>
-        ("DATA_MASK", p.getTagValue(graft.plans.SecurityTags.MaskAudit).get)
-    } ++ identityMasks.map(("DATA_MASK", _))
-    auditBuf.synchronized {
-      auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
-      decisions.foreach { case (action, crumb) =>
-        val Array(obj, detail) = crumb.split("\\|", 2)
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-      }
+  private def audit(user: String, api: String, sql: String,
+      decisions: Seq[(String, String)]): Unit = auditBuf.synchronized {
+    auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
+    decisions.foreach { case (action, crumb) =>
+      val Array(obj, detail) = crumb.split("\\|", 2)
+      auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
     }
-    plan
   }
+
+  /** The policy applications the rules tagged in `plan`: each injection
+    * site carries a `SecurityTags.*Audit` breadcrumb, and
+    * collectWithSubqueries also reaches plans inside EXISTS/IN/scalar
+    * subquery expressions.
+    */
+  private def taggedDecisions(plan: LogicalPlan): Seq[(String, String)] =
+    plan.collectWithSubqueries {
+      case f: Filter => f.getTagValue(SecurityTags.RowFilterAudit).map("ROW_FILTER" -> _)
+        .orElse(f.getTagValue(SecurityTags.RowDenyAudit).map("ROW_DENY" -> _))
+      case p: Project => p.getTagValue(SecurityTags.MaskAudit).map("DATA_MASK" -> _)
+    }.flatten
 
   /** The audit trail as a DataFrame (seq, principal, action, obj, detail),
     * in call order. Identity-only mask matches record as ordinary DATA_MASK
@@ -143,74 +157,61 @@ final class SecurityContext(
     */
   private def enforceColumnDeny(user: String, api: String, sql: String,
       plan: LogicalPlan): Unit = {
-    val violations =
-      graft.plans.ColumnDenyCheck.violations(plan, user, policyManager, scope)
+    val violations = ColumnDenyCheck.violations(plan, user, policyManager, scope)
     if (violations.nonEmpty) {
-      auditBuf.synchronized {
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", api, sql)
-        violations.foreach { case (obj, cols) =>
-          auditBuf += AuditEntry(auditBuf.size.toLong, user, "COLUMN_DENY",
-            obj, cols.mkString(","))
-        }
-      }
-      throw new ColumnAccessDeniedException(
-        s"user '$user' is denied column(s) " +
-          violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-          " — the query references them and fails closed")
+      audit(user, api, sql, violations.map { case (obj, cols) =>
+        "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}" })
+      throw ColumnAccessDeniedException.columns(user, violations)
     }
   }
 
-  /** Parse + analyze + column-deny gate — the shared front of every rewrite
-    * entry point (deny beats both rewrites, so it runs first).
+  /** The read rewrite behind every entry point: parse + analyze, the
+    * column-deny gate (deny beats both rewrites, so it runs first), row
+    * filters (`denyOnly`: deny decisions only), masks when `masked`, then
+    * re-analysis and the audit. Identity-only mask decisions (MASK_NONE-only
+    * scans build no Project to tag — [[graft.plans.DataMaskRule.identityAudit]])
+    * follow the plan-collected rows.
     */
-  private def checkedPlan(user: String, api: String, sql: String): LogicalPlan = {
+  private def secureRead(user: String, api: String, sql: String,
+      denyOnly: Boolean = false, masked: Boolean = true,
+      filterOnRaw: Boolean = false): LogicalPlan = {
     val base = analyzed(parseSql(sql))
     enforceColumnDeny(user, api, sql, base)
-    base
+    val filtered = RowFilterRule(spark, user, policyManager, scope, denyOnly = denyOnly)(base)
+    val mask = Option.when(masked)(DataMaskRule(spark, user, policyManager, scope,
+      filterOnRaw = filterOnRaw, auditIdentity = true))
+    val plan = analyzed(mask.fold(filtered)(_(filtered)))
+    audit(user, api, sql, taggedDecisions(plan) ++
+      mask.toSeq.flatMap(_.identityAudit).map("DATA_MASK" -> _))
+    plan
   }
 
   // --- rewrite-only API (reference SecurityContext.java:126-167) ---
 
   def rewriteRowFilter(user: String, sql: String): LogicalPlan =
-    recordAudit(user, "row_filter", sql,
-      analyzed(RowFilterRule(spark, user, policyManager, scope)(
-        checkedPlan(user, "row_filter", sql))))
+    secureRead(user, "row_filter", sql, masked = false)
 
-  def rewriteDataMask(user: String, sql: String): LogicalPlan = {
-    // deny gate (denyOnly row-filter pass): the mask-only entry point must
-    // never return rows of a DENIED table — without it, dfDataMask alone
-    // would be fail-open relative to Ranger semantics
-    val denyGated = RowFilterRule(spark, user, policyManager, scope,
-      denyOnly = true)(checkedPlan(user, "data_mask", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, auditIdentity = true)
-    recordAudit(user, "data_mask", sql,
-      analyzed(rule(denyGated)), rule.identityAudit.toSeq)
-  }
+  /** Masks only — behind a deny gate (denyOnly row-filter pass): the
+    * mask-only entry point must never return rows of a DENIED table —
+    * without it, dfDataMask alone would be fail-open relative to Ranger
+    * semantics.
+    */
+  def rewriteDataMask(user: String, sql: String): LogicalPlan =
+    secureRead(user, "data_mask", sql, denyOnly = true)
 
   /** Row filter BEFORE mask — fixed order, filters see masked values
     * (SecurityContext.java:154-167).
     */
-  def mixedRewrite(user: String, sql: String): LogicalPlan = {
-    val filtered = RowFilterRule(spark, user, policyManager, scope)(
-      checkedPlan(user, "mixed", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, auditIdentity = true)
-    recordAudit(user, "mixed", sql,
-      analyzed(rule(filtered)), rule.identityAudit.toSeq)
-  }
+  def mixedRewrite(user: String, sql: String): LogicalPlan =
+    secureRead(user, "mixed", sql)
 
   /** Ranger-style composition (the divergence switch of SURVEY §7.3): row
     * filters evaluate over RAW column values; masking applies to the output
     * only. Use when a policy filters on a column that is also masked and the
     * reference's filter-sees-masked-values quirk is not wanted.
     */
-  def mixedRewriteRawFilter(user: String, sql: String): LogicalPlan = {
-    val filtered = RowFilterRule(spark, user, policyManager, scope)(
-      checkedPlan(user, "mixed_raw_filter", sql))
-    val rule = DataMaskRule(spark, user, policyManager, scope, filterOnRaw = true,
-      auditIdentity = true)
-    recordAudit(user, "mixed_raw_filter", sql,
-      analyzed(rule(filtered)), rule.identityAudit.toSeq)
-  }
+  def mixedRewriteRawFilter(user: String, sql: String): LogicalPlan =
+    secureRead(user, "mixed_raw_filter", sql, filterOnRaw = true)
 
   // --- rewrite-to-SQL API (best-effort text, for diffing/goldens; the
   // reference returns SQL strings, SecurityContext.java:126-167) ---
@@ -252,44 +253,20 @@ final class SecurityContext(
     * denied tables/columns (after auditing the denial).
     */
   def rewriteDml(user: String, sql: String): LogicalPlan = {
+    // the target-side decisions (condition rewrites, no plan node to tag)
+    // arrive through the rule's crumb buffer
     val rule = DmlSecurityRewrite(spark, user, policyManager, scope)
-    def crumbs(): Seq[(String, String)] = rule.dmlAudit.toSeq.map { c =>
-      val Array(action, rest) = c.split("\\|", 2)
-      (action, rest)
-    }
     val rewritten =
       try rule(parseSql(sql))
       catch { case e: ColumnAccessDeniedException =>
-        auditBuf.synchronized {
-          auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", "dml", sql)
-          crumbs().foreach { case (action, crumb) =>
-            val Array(obj, detail) = crumb.split("\\|", 2)
-            auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-          }
-        }
+        audit(user, "dml", sql, rule.dmlAudit.toSeq)
         throw e
       }
-    // source-side rule applications carry the ordinary plan tags; the
-    // target-side constraint (a condition rewrite, no plan node to tag)
-    // arrives through the rule's crumb buffer
     val plan = analyzed(rewritten)
-    val tagged = plan.collectWithSubqueries {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).isDefined =>
-        ("ROW_FILTER", f.getTagValue(graft.plans.SecurityTags.RowFilterAudit).get)
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project
-          if p.getTagValue(graft.plans.SecurityTags.MaskAudit).isDefined =>
-        ("DATA_MASK", p.getTagValue(graft.plans.SecurityTags.MaskAudit).get)
-    }.distinct // the merge rewrite replays the source subtree into several
-               // plan positions (join leg, cardinality check) — one policy
-               // decision, one audit row
-    auditBuf.synchronized {
-      auditBuf += AuditEntry(auditBuf.size.toLong, user, "QUERY", "dml", sql)
-      (crumbs() ++ tagged).foreach { case (action, crumb) =>
-        val Array(obj, detail) = crumb.split("\\|", 2)
-        auditBuf += AuditEntry(auditBuf.size.toLong, user, action, obj, detail)
-      }
-    }
+    // .distinct: the merge rewrite replays the source subtree into several
+    // plan positions (join leg, cardinality check) — one policy decision,
+    // one audit row
+    audit(user, "dml", sql, rule.dmlAudit.toSeq ++ taggedDecisions(plan).distinct)
     plan
   }
 

@@ -33,7 +33,7 @@ class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
       new Rule[LogicalPlan] {
         override def apply(plan: LogicalPlan): LogicalPlan = currentUser(session) match {
           case Some(u) =>
-            ensureFunctions(session)
+            MaskFunctions.register(session) // once per session, its own guard
             val s = scopeOf(session)
             val filtered = RowFilterRule(session, u, policies, s, postAnalysis = false)(plan)
             // Masking needs resolved outputs to propagate fresh exprIds; wait
@@ -52,10 +52,7 @@ class GraftSecurityExtensions extends (SparkSessionExtensions => Unit) {
     e.injectCheckRule { session => plan =>
       currentUser(session).foreach { u =>
         val vs = ColumnDenyCheck.violations(plan, u, policies, scopeOf(session))
-        if (vs.nonEmpty) throw new graft.ColumnAccessDeniedException(
-          s"user '$u' is denied column(s) " +
-            vs.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }.mkString("; ") +
-            " — the query references them and fails closed")
+        if (vs.nonEmpty) throw graft.ColumnAccessDeniedException.columns(u, vs)
       }
     }
   }
@@ -79,13 +76,4 @@ object GraftSecurityExtensions {
     TableScope(
       spark.conf.get(CatalogKey, "spark_catalog"),
       spark.conf.get(DatabaseKey, "default"))
-
-  // weak keys: this process-wide set must not pin sessions (and their whole
-  // sessionState) against garbage collection in long-lived multi-session apps
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  private def ensureFunctions(spark: SparkSession): Unit =
-    if (registered.add(spark)) MaskFunctions.register(spark)
 }

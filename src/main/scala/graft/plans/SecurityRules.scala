@@ -99,8 +99,7 @@ object PlanShapes {
 
   /** (catalog, db, table) of a SubqueryAlias identifier; empty qualifiers
     * get the scope's defaults, like Flink's validator qualifying bare names.
-    * Shared by the rules (via [[SecurityRuleSupport.tableParts]]) and the
-    * column-deny check in [[graft.SecurityContext]].
+    * Shared by the rules, the DML rewrite and the column-deny check.
     */
   def tableParts(id: org.apache.spark.sql.catalyst.AliasIdentifier,
       scope: TableScope): (String, String, String) =
@@ -298,6 +297,21 @@ object ColumnDenyCheck {
 trait SecurityRuleSupport {
   def scope: TableScope
   def spark: SparkSession
+  def user: String
+
+  /** The AND of a table's row-filter conditions, parsed; a condition that
+    * does not parse fails the rewrite, naming the policy's scope.
+    */
+  protected def parseConditions(conds: Seq[String], cat: String, db: String,
+      table: String): Expression =
+    conds.map { c =>
+      try spark.sessionState.sqlParser.parseExpression(c)
+      catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"row-filter policy for user '$user' on $cat.$db.$table has " +
+            s"an unparseable condition: $c", e)
+      }
+    }.reduceLeft[Expression](And(_, _))
 
   /** V1 leaf commands (CTAS, save, insert-into-dir, ...) embed their query as
     * an innerChild, NOT a child — tree traversals never see it, so without
@@ -325,8 +339,8 @@ trait SecurityRuleSupport {
       case leaf if leaf.children.isEmpty =>
         val policied = leaf.innerChildren.collect { case p: LogicalPlan => p }
           .flatMap(_.collect {
-            case SubqueryAlias(id, child) if isBaseTable(child) =>
-              tableParts(id)
+            case SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
+              PlanShapes.tableParts(id, scope)
           })
           .filter((isPolicied.apply _).tupled)
         if (policied.nonEmpty) throw new UnsupportedOperationException(
@@ -337,17 +351,6 @@ trait SecurityRuleSupport {
       case _ => None
     }
   }
-
-  /** A scan of a named table — the ONE shared predicate (also used by
-    * [[SqlRenderer]]); see [[PlanShapes.isBaseTable]].
-    */
-  protected def isBaseTable(p: LogicalPlan): Boolean = PlanShapes.isBaseTable(p)
-
-  /** (catalog, db, table) of a SubqueryAlias identifier; empty qualifiers get
-    * the context's defaults, like Flink's validator qualifying bare names.
-    */
-  protected def tableParts(id: org.apache.spark.sql.catalyst.AliasIdentifier): (String, String, String) =
-    PlanShapes.tableParts(id, scope)
 }
 
 /** Injects row-level-security filters for `user` (reference:
@@ -368,14 +371,11 @@ final case class RowFilterRule(
     denyOnly: Boolean = false
 ) extends Rule[LogicalPlan] with SecurityRuleSupport {
 
-  private def alreadyFiltered(child: LogicalPlan): Boolean = child match {
-    case f: Filter => f.getTagValue(SecurityTags.RowFilterApplied).contains(true)
-    case _ => false
-  }
-
+  // an alias whose child is already an injected Filter is no base-table scan,
+  // so a rewritten scan is never filtered twice
   private val pf: PartialFunction[LogicalPlan, LogicalPlan] = {
-    case sa @ SubqueryAlias(id, child) if isBaseTable(child) && !alreadyFiltered(child) =>
-      val (cat, db, table) = tableParts(id)
+    case sa @ SubqueryAlias(id, child) if PlanShapes.isBaseTable(child) =>
+      val (cat, db, table) = PlanShapes.tableParts(id, scope)
       // deny checked FIRST and tagged as the deny it is (audit action
       // ROW_DENY): rowFilterConditions also collapses to `false` under an
       // active deny, but the trail must distinguish a deny decision from an
@@ -388,17 +388,7 @@ final case class RowFilterRule(
       conds match {
         case Seq() => sa
         case conds =>
-          val cond = conds
-            .map { c =>
-              try spark.sessionState.sqlParser.parseExpression(c)
-              catch {
-                case e: Exception => throw new IllegalArgumentException(
-                  s"row-filter policy for user '$user' on $cat.$db.$table has " +
-                    s"an unparseable condition: $c", e)
-              }
-            }
-            .reduceLeft[Expression](And(_, _))
-          val filter = Filter(cond, child)
+          val filter = Filter(parseConditions(conds, cat, db, table), child)
           filter.setTagValue(SecurityTags.RowFilterApplied, true)
           if (denied)
             filter.setTagValue(SecurityTags.RowDenyAudit, s"$cat.$db.$table|DENY")
@@ -490,6 +480,16 @@ final case class DataMaskRule(
     }
   }
 
+  /** Give every time-zone-aware node the session time zone. The analyzer
+    * does this for parsed SQL, but a mask is resolved here, eagerly: without
+    * a zone a TIMESTAMP-to-DATE cast (MASK_DATE_SHOW_YEAR's, or the cast
+    * back to a TIMESTAMP column) never resolves.
+    */
+  private def zoned(e: Expression): Expression = e.transformUp {
+    case z: TimeZoneAwareExpression if z.timeZoneId.isEmpty =>
+      z.withTimeZone(spark.sessionState.conf.sessionLocalTimeZone)
+  }
+
   private def maskedProject(base: LogicalPlan, cat: String, db: String,
       table: String): Option[(LogicalPlan, Seq[(Attribute, Attribute)])] = {
     val mapping = Seq.newBuilder[(Attribute, Attribute)]
@@ -502,7 +502,7 @@ final case class DataMaskRule(
     var any = false
     def aliasAs(attr: Attribute, e: Expression): NamedExpression = {
       any = true
-      val a = Alias(Cast(e, attr.dataType), attr.name)(qualifier = attr.qualifier)
+      val a = Alias(zoned(Cast(e, attr.dataType)), attr.name)(qualifier = attr.qualifier)
       mapping += attr -> a.toAttribute
       a
     }
@@ -567,7 +567,7 @@ final case class DataMaskRule(
       def bottomIsBase(q: LogicalPlan): Boolean = q match {
         case g: Filter => bottomIsBase(g.child)
         case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) => false
-        case b => isBaseTable(b)
+        case b => PlanShapes.isBaseTable(b)
       }
       if (bottomIsBase(f)) maskedProject(f, cat, db, table) else None
     case f: Filter =>
@@ -577,25 +577,18 @@ final case class DataMaskRule(
             mapping.collectFirst { case (from, to) if from.exprId == a.exprId => to }.getOrElse(a)
         }
         val nf = Filter(remapped, nc)
-        f.getTagValue(SecurityTags.RowFilterApplied)
-          .foreach(v => nf.setTagValue(SecurityTags.RowFilterApplied, v))
-        f.getTagValue(SecurityTags.RowFilterAudit)
-          .foreach(v => nf.setTagValue(SecurityTags.RowFilterAudit, v))
-        f.getTagValue(SecurityTags.RowDenyAudit)
-          .foreach(v => nf.setTagValue(SecurityTags.RowDenyAudit, v))
+        nf.copyTagsFrom(f)
         (nf, mapping)
       }
     case pr: Project if pr.getTagValue(SecurityTags.MaskApplied).contains(true) =>
       None // re-entrancy guard
-    case base if isBaseTable(base) => maskedProject(base, cat, db, table)
+    case base if PlanShapes.isBaseTable(base) => maskedProject(base, cat, db, table)
     case _ => None
   }
 
-  private def hasMask(cat: String, db: String, table: String): Boolean =
-    policies.hasDataMask(user, cat, db, table)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    applyToEmbeddedQuery(plan, apply, hasMask).getOrElse(applyToTree(plan))
+    applyToEmbeddedQuery(plan, apply, policies.hasDataMask(user, _, _, _))
+      .getOrElse(applyToTree(plan))
 
   private def applyToTree(plan: LogicalPlan): LogicalPlan = {
     // mask tables referenced inside subquery expressions (EXISTS/IN/scalar)
@@ -606,7 +599,7 @@ final case class DataMaskRule(
     }
     withSubqueries.transformUpWithNewOutput {
       case sa @ SubqueryAlias(id, child) =>
-        val (cat, db, table) = tableParts(id)
+        val (cat, db, table) = PlanShapes.tableParts(id, scope)
         injectUnderFilters(child, cat, db, table) match {
           case Some((newChild, mapping)) => (SubqueryAlias(id, newChild), mapping)
           case None => (sa, Nil)
@@ -667,18 +660,16 @@ final case class DmlSecurityRewrite(
 
   import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 
-  /** Audit crumbs ("action|cat.db.table|detail") for decisions that have no
-    * plan node to tag (the target-side constraint rewrites CONDITIONS, not
-    * plans). Drained by [[graft.SecurityContext]] after the rewrite.
+  /** Audit crumbs (action, "cat.db.table|detail") for decisions that have
+    * no plan node to tag (the target-side constraint rewrites CONDITIONS,
+    * not plans). Drained by [[graft.SecurityContext]] after the rewrite.
     */
-  val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[String]
+  val dmlAudit = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
-  private def parts(rel: UnresolvedRelation): (String, String, String) =
-    rel.multipartIdentifier match {
-      case Seq(t) => (scope.catalog, scope.database, t)
-      case Seq(db, t) => (scope.catalog, db, t)
-      case ps => (ps.head, ps.init.last, ps.last)
-    }
+  private def parts(rel: UnresolvedRelation): (String, String, String) = {
+    val ps = rel.multipartIdentifier
+    PlanShapes.tableParts(org.apache.spark.sql.catalyst.AliasIdentifier(ps.last, ps.init), scope)
+  }
 
   /** (relation, qualifier-for-injected-conditions): the alias if the target
     * is aliased, the table name otherwise.
@@ -701,7 +692,7 @@ final case class DmlSecurityRewrite(
   private def targetConstraint(cat: String, db: String, table: String,
       qualifier: String): Option[Expression] = {
     if (policies.isDenied(user, cat, db, table)) {
-      dmlAudit += s"ROW_DENY|$cat.$db.$table|DENY"
+      dmlAudit += "ROW_DENY" -> s"$cat.$db.$table|DENY"
       throw new graft.ColumnAccessDeniedException(
         s"user '$user' is denied rows of $cat.$db.$table — row-level DML " +
           "against a denied table fails closed")
@@ -709,16 +700,10 @@ final case class DmlSecurityRewrite(
     val conds = policies.rowFilterConditions(user, cat, db, table)
     if (conds.isEmpty) None
     else {
-      val parsed = conds.map { c =>
-        try spark.sessionState.sqlParser.parseExpression(c)
-        catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"row-filter policy for user '$user' on $cat.$db.$table has " +
-              s"an unparseable condition: $c", e)
-        }
-      }
-      dmlAudit += s"ROW_FILTER|$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
-      Some(parsed.map(qualify(qualifier, _)).reduceLeft[Expression](And(_, _)))
+      val cond = qualify(qualifier, parseConditions(conds, cat, db, table))
+      dmlAudit += "ROW_FILTER" ->
+        s"$cat.$db.$table|${conds.mkString(" AND ")} (DML target constraint)"
+      Some(cond)
     }
   }
 
@@ -761,12 +746,9 @@ final case class DmlSecurityRewrite(
     }
     if (violations.nonEmpty) {
       violations.foreach { case (obj, cols) =>
-        dmlAudit += s"COLUMN_DENY|$obj|${cols.mkString(",")}"
+        dmlAudit += "COLUMN_DENY" -> s"$obj|${cols.mkString(",")}"
       }
-      throw new graft.ColumnAccessDeniedException(
-        s"user '$user' is denied column(s) " +
-          violations.map { case (o, cs) => s"$o.(${cs.mkString(",")})" }
-            .mkString("; ") + " — the DML statement references them and fails closed")
+      throw graft.ColumnAccessDeniedException.columns(user, violations, "DML statement")
     }
   }
 

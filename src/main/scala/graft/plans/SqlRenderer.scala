@@ -136,7 +136,20 @@ object SqlRenderer {
       (s"$l $jt $r$on", lh ++ rh)
     case sa @ SubqueryAlias(_, _) => renderAliased(sa)
     case leaf: LeafNode => (leafName(leaf).getOrElse(leaf.nodeName), Nil)
-    case other => (s"( ${renderSelect(other)} )", Nil)
+    case other if rendersAsSelect(other) => (s"( ${renderSelect(other)} )", Nil)
+    // renderSelect's fallback would hand this node straight back here
+    case other => throw new UnsupportedOperationException(
+      s"SqlRenderer cannot render ${other.nodeName}")
+  }
+
+  /** The nodes renderSelect takes apart rather than passing back to
+    * renderFrom whole: its own cases, and a user Filter that fromAndWhere
+    * strips.
+    */
+  private def rendersAsSelect(p: LogicalPlan): Boolean = p match {
+    case _: Sort | GlobalLimit(_, _: LocalLimit) | _: Project | _: Aggregate => true
+    case f: Filter => !isInjected(f)
+    case _ => false
   }
 
   /** A SubqueryAlias chain over a base table, possibly with injected

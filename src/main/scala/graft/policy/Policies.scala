@@ -7,6 +7,18 @@ package graft.policy
   * and DataMaskPolicy.java:30-43) as plain Scala case classes. Identifiers are
   * matched case-insensitively, like Calcite/Spark's default resolver.
   */
+/** What every policy kind is scoped by: a principal (user, group or `*`),
+  * a catalog.db.table whose parts may each be `*`, and a validity window.
+  */
+sealed trait TablePolicy extends Product {
+  def username: String
+  def catalogName: String
+  def database: String
+  def tableName: String
+  def validFrom: Option[String]
+  def validUntil: Option[String]
+}
+
 final case class RowFilterPolicy(
     username: String,
     catalogName: String,
@@ -21,7 +33,7 @@ final case class RowFilterPolicy(
       */
     validFrom: Option[String] = None,
     validUntil: Option[String] = None
-)
+) extends TablePolicy
 
 final case class DataMaskPolicy(
     username: String,
@@ -34,7 +46,7 @@ final case class DataMaskPolicy(
     /** Validity window — see [[RowFilterPolicy.validFrom]]. */
     validFrom: Option[String] = None,
     validUntil: Option[String] = None
-)
+) extends TablePolicy
 
 /** Ranger-style DENY: while active, the principal reads ZERO rows of the
   * table, regardless of any row-filter policy that would otherwise allow
@@ -53,7 +65,7 @@ final case class DenyRowPolicy(
     /** Validity window — see [[RowFilterPolicy.validFrom]]. */
     validFrom: Option[String] = None,
     validUntil: Option[String] = None
-)
+) extends TablePolicy
 
 /** Ranger-style COLUMN deny: while active, the principal may not READ the
   * column at all — a query that references it (including via `SELECT *`
@@ -73,7 +85,7 @@ final case class ColumnDenyPolicy(
     /** Validity window — see [[RowFilterPolicy.validFrom]]. */
     validFrom: Option[String] = None,
     validUntil: Option[String] = None
-)
+) extends TablePolicy
 
 /** A named masking strategy with a transformer template in which `{col}` is
   * substituted with the column name (reference: enums/DataMaskType.java:30-43,
@@ -173,17 +185,18 @@ object DataMaskType {
   *    matches nothing, a malformed instant fails loudly. `clock` is
   *    injectable for deterministic tests.
   *
-  * Thread-safe; policies are expected to be few (admin-entered). At 100 TB
-  * scale this lives on the driver only — lookups happen during plan rewrite,
-  * never per-row — so a linear scan is irrelevant to executor throughput.
+  * Thread-safe. Lookups run on the driver during plan rewrite, never per
+  * row, but each one scans every stored policy: a rewrite's lookup cost is
+  * linear in the GLOBAL policy count, not in the policies that apply to the
+  * user (ROADMAP item 2 measures it and plans the index).
   */
 final class PolicyManager {
+  import PolicyManager._
   import scala.collection.mutable.ArrayBuffer
+  import scala.reflect.ClassTag
 
-  private val rowFilters = ArrayBuffer.empty[RowFilterPolicy]
-  private val dataMasks = ArrayBuffer.empty[DataMaskPolicy]
-  private val denies = ArrayBuffer.empty[DenyRowPolicy]
-  private val colDenies = ArrayBuffer.empty[ColumnDenyPolicy]
+  /** Every policy of every kind, in insertion order. */
+  private val policies = ArrayBuffer.empty[TablePolicy]
   private val maskTypes = ArrayBuffer.from(DataMaskType.builtin)
 
   /** Clock for validity-window evaluation — injectable so tests and oracled
@@ -192,19 +205,11 @@ final class PolicyManager {
     */
   @volatile var clock: () => java.time.Instant = () => java.time.Instant.now()
 
-  /** [validFrom, validUntil) against [[clock]]; malformed instants throw —
-    * a policy whose window cannot be read must never silently deactivate.
-    */
-  private def inWindow(validFrom: Option[String], validUntil: Option[String]): Boolean = {
-    val now = clock()
-    validFrom.forall(f => !now.isBefore(java.time.Instant.parse(f))) &&
-      validUntil.forall(u => now.isBefore(java.time.Instant.parse(u)))
-  }
   /** group name (lowercase) -> member usernames (lowercase) */
   private val groupMembers =
     scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
 
-  private def eq(a: String, b: String): Boolean = a.equalsIgnoreCase(b)
+  private def same(a: String, b: String): Boolean = a.equalsIgnoreCase(b)
 
   def addUserToGroup(user: String, group: String): Unit = synchronized {
     require(group != "*", "'*' is the wildcard principal, not a group name")
@@ -221,66 +226,65 @@ final class PolicyManager {
     }.toSet
   }
 
-  /** Specificity of a policy principal for `user`: 2 exact, 1 via group, 0
-    * wildcard, -1 no match.
+  /** One lookup of (user, catalog.db.table): the user's groups and "now"
+    * are resolved once, not per policy. Callers hold the monitor.
     */
-  private def principalRank(policyUser: String, user: String): Int =
-    if (eq(policyUser, user)) 2
-    else if (groupsOf(user).contains(policyUser.toLowerCase)) 1
-    else if (policyUser == "*") 0
-    else -1
+  private final class Lookup(user: String, catalog: String, db: String, table: String) {
+    private val groups = groupsOf(user)
+    private val now = clock()
 
-  /** Specificity of a name field: 1 exact, 0 wildcard, -1 no match. */
-  private def nameRank(policyName: String, actual: String): Int =
-    if (eq(policyName, actual)) 1 else if (policyName == "*") 0 else -1
+    private def nameRank(policyName: String, actual: String): Int =
+      if (same(policyName, actual)) 1 else if (policyName == "*") 0 else -1
 
-  def addPolicy(p: RowFilterPolicy): Boolean = synchronized { rowFilters += p; true }
+    /** The in-window policies of kind `P` that apply, lazily and in
+      * insertion order, each with its specificity (principal, table, db,
+      * catalog): a principal ranks 2 exact, 1 via group, 0 wildcard; a name
+      * 1 exact, 0 wildcard. Each visited policy's window is read first, so
+      * a malformed instant throws — a policy whose window cannot be read
+      * must never silently deactivate.
+      */
+    def of[P <: TablePolicy : ClassTag]: Iterator[(P, (Int, Int, Int, Int))] =
+      policies.iterator.collect { case p: P => p }.flatMap { p =>
+        val active =
+          p.validFrom.forall(f => !now.isBefore(java.time.Instant.parse(f))) &&
+            p.validUntil.forall(u => now.isBefore(java.time.Instant.parse(u)))
+        val rank = (
+          if (same(p.username, user)) 2
+          else if (groups.contains(p.username.toLowerCase)) 1
+          else if (p.username == "*") 0
+          else -1,
+          nameRank(p.tableName, table), nameRank(p.database, db),
+          nameRank(p.catalogName, catalog))
+        if (active && rank._1 >= 0 && rank._2 >= 0 && rank._3 >= 0 && rank._4 >= 0)
+          Some((p, rank))
+        else None
+      }
+  }
+
+  def addPolicy(p: TablePolicy): Boolean = synchronized { policies += p; true }
   // Removal matches with the same case-insensitive comparison as the lookups
   // (rowFilterConditions/dataMaskType): a policy added as ('Analyst', 'CUSTOMER',
   // ...) enforces case-insensitively, so it must be removable that way too.
-  // Validity windows are part of the identity: a renewal flow holds two
-  // policies identical except for [validFrom, validUntil), and removal must
-  // delete the one named, not whichever was inserted first.
-  def removePolicy(p: RowFilterPolicy): Boolean = synchronized {
-    val i = rowFilters.indexWhere(q =>
-      eq(q.username, p.username) && eq(q.catalogName, p.catalogName) &&
-        eq(q.database, p.database) && eq(q.tableName, p.tableName) &&
-        q.condition == p.condition &&
-        q.validFrom == p.validFrom && q.validUntil == p.validUntil)
-    if (i >= 0) { rowFilters.remove(i); true } else false
-  }
-  def addPolicy(p: DataMaskPolicy): Boolean = synchronized { dataMasks += p; true }
-  def removePolicy(p: DataMaskPolicy): Boolean = synchronized {
-    val i = dataMasks.indexWhere(q =>
-      eq(q.username, p.username) && eq(q.catalogName, p.catalogName) &&
-        eq(q.database, p.database) && eq(q.tableName, p.tableName) &&
-        eq(q.columnName, p.columnName) && eq(q.maskType, p.maskType) &&
-        q.validFrom == p.validFrom && q.validUntil == p.validUntil)
-    if (i >= 0) { dataMasks.remove(i); true } else false
-  }
-  def addPolicy(p: DenyRowPolicy): Boolean = synchronized { denies += p; true }
-  def removePolicy(p: DenyRowPolicy): Boolean = synchronized {
-    val i = denies.indexWhere(q =>
-      eq(q.username, p.username) && eq(q.catalogName, p.catalogName) &&
-        eq(q.database, p.database) && eq(q.tableName, p.tableName) &&
-        q.validFrom == p.validFrom && q.validUntil == p.validUntil)
-    if (i >= 0) { denies.remove(i); true } else false
-  }
-  def addPolicy(p: ColumnDenyPolicy): Boolean = synchronized { colDenies += p; true }
-  def removePolicy(p: ColumnDenyPolicy): Boolean = synchronized {
-    val i = colDenies.indexWhere(q =>
-      eq(q.username, p.username) && eq(q.catalogName, p.catalogName) &&
-        eq(q.database, p.database) && eq(q.tableName, p.tableName) &&
-        eq(q.columnName, p.columnName) &&
-        q.validFrom == p.validFrom && q.validUntil == p.validUntil)
-    if (i >= 0) { colDenies.remove(i); true } else false
+  // A row filter's condition is SQL text and compares exactly. Validity
+  // windows are part of the identity: a renewal flow holds two policies
+  // identical except for [validFrom, validUntil), and removal must delete
+  // the one named, not whichever was inserted first.
+  def removePolicy(p: TablePolicy): Boolean = synchronized {
+    val i = policies.indexWhere(q => q.getClass == p.getClass &&
+      p.productElementNames.zip(p.productIterator.zip(q.productIterator)).forall {
+        case (field, (a: String, b: String)) if field != "condition" => same(a, b)
+        case (_, (a, b)) => a == b
+      })
+    if (i >= 0) { policies.remove(i); true } else false
   }
   def registerMaskType(t: DataMaskType): Unit = synchronized { maskTypes += t }
 
-  def rowFilterPolicies: Seq[RowFilterPolicy] = synchronized(rowFilters.toSeq)
-  def dataMaskPolicies: Seq[DataMaskPolicy] = synchronized(dataMasks.toSeq)
-  def denyPolicies: Seq[DenyRowPolicy] = synchronized(denies.toSeq)
-  def columnDenyPolicies: Seq[ColumnDenyPolicy] = synchronized(colDenies.toSeq)
+  private def ofKind[P <: TablePolicy : ClassTag]: Seq[P] =
+    synchronized(policies.collect { case p: P => p }.toSeq)
+  def rowFilterPolicies: Seq[RowFilterPolicy] = ofKind[RowFilterPolicy]
+  def dataMaskPolicies: Seq[DataMaskPolicy] = ofKind[DataMaskPolicy]
+  def denyPolicies: Seq[DenyRowPolicy] = ofKind[DenyRowPolicy]
+  def columnDenyPolicies: Seq[ColumnDenyPolicy] = ofKind[ColumnDenyPolicy]
 
   /** Column names with an ACTIVE column deny for (user, table), at any
     * specificity — the rewrite entry points fail a query referencing any of
@@ -290,13 +294,8 @@ final class PolicyManager {
     */
   def deniedColumns(user: String, catalog: String, db: String,
       table: String): Seq[String] = synchronized {
-    colDenies.collect {
-      case p if inWindow(p.validFrom, p.validUntil) &&
-        principalRank(p.username, user) >= 0 &&
-        nameRank(p.catalogName, catalog) >= 0 &&
-        nameRank(p.database, db) >= 0 &&
-        nameRank(p.tableName, table) >= 0 => p.columnName
-    }.toSeq.distinct
+    new Lookup(user, catalog, db, table).of[ColumnDenyPolicy]
+      .map(_._1.columnName).toSeq.distinct
   }
 
   /** True when an ACTIVE deny matches (user, table) at any specificity —
@@ -305,11 +304,7 @@ final class PolicyManager {
     */
   def isDenied(user: String, catalog: String, db: String,
       table: String): Boolean = synchronized {
-    denies.exists(p => inWindow(p.validFrom, p.validUntil) &&
-      principalRank(p.username, user) >= 0 &&
-      nameRank(p.catalogName, catalog) >= 0 &&
-      nameRank(p.database, db) >= 0 &&
-      nameRank(p.tableName, table) >= 0)
+    new Lookup(user, catalog, db, table).of[DenyRowPolicy].hasNext
   }
 
   /** All AND-able conditions for (user, table); reference keeps at most one
@@ -323,35 +318,25 @@ final class PolicyManager {
     // condition is `false` FULL STOP — matching allow-filters are discarded
     // rather than AND-ed so the injected predicate (and its audit row)
     // reads as the deny decision, not an accidental conjunction
-    if (isDenied(user, catalog, db, table)) Seq("false")
-    else rowFilters.collect {
-      case p if inWindow(p.validFrom, p.validUntil) &&
-        principalRank(p.username, user) >= 0 &&
-        nameRank(p.catalogName, catalog) >= 0 &&
-        nameRank(p.database, db) >= 0 &&
-        nameRank(p.tableName, table) >= 0 => p.condition
-    }.toSeq
+    val lookup = new Lookup(user, catalog, db, table)
+    if (lookup.of[DenyRowPolicy].hasNext) Seq("false")
+    else lookup.of[RowFilterPolicy].map(_._1.condition).toSeq
   }
 
   def dataMaskType(user: String, catalog: String, db: String, table: String,
       column: String): Option[DataMaskType] = synchronized {
     // most-specific-wins: rank (user, table, db, catalog) lexicographically;
-    // stable maxBy keeps insertion order on full ties. The column itself is
-    // never a wildcard — masking is a per-column decision.
-    val matches = dataMasks.flatMap { p =>
-      val ranks = (principalRank(p.username, user), nameRank(p.tableName, table),
-        nameRank(p.database, db), nameRank(p.catalogName, catalog))
-      if (inWindow(p.validFrom, p.validUntil) && eq(p.columnName, column) &&
-        ranks._1 >= 0 && ranks._2 >= 0 && ranks._3 >= 0 && ranks._4 >= 0)
-        Some((ranks, p.maskType))
-      else None
-    }
-    (if (matches.isEmpty) None else Some(matches.maxBy(_._1)._2)).map { name =>
-      // fail closed: a policy naming an unregistered mask type must never
-      // degrade to passthrough — that would silently expose the column
-      getMaskType(name).getOrElse(throw new IllegalStateException(
-        s"mask policy on $catalog.$db.$table.$column references unregistered mask type '$name'"))
-    }
+    // maxByOption keeps the first of equal ranks, i.e. insertion order on
+    // full ties. The column itself is never a wildcard — masking is a
+    // per-column decision.
+    new Lookup(user, catalog, db, table).of[DataMaskPolicy]
+      .filter(m => same(m._1.columnName, column)).toSeq
+      .maxByOption(_._2).map { case (p, _) =>
+        // fail closed: a policy naming an unregistered mask type must never
+        // degrade to passthrough — that would silently expose the column
+        getMaskType(p.maskType).getOrElse(throw new IllegalStateException(
+          s"mask policy on $catalog.$db.$table.$column references unregistered mask type '${p.maskType}'"))
+      }
   }
 
   /** Any mask policy (user-exact, group or wildcard) on any column of the
@@ -360,45 +345,31 @@ final class PolicyManager {
     */
   def hasDataMask(user: String, catalog: String, db: String,
       table: String): Boolean = synchronized {
-    dataMasks.exists(p => inWindow(p.validFrom, p.validUntil) &&
-      principalRank(p.username, user) >= 0 &&
-      nameRank(p.catalogName, catalog) >= 0 && nameRank(p.database, db) >= 0 &&
-      nameRank(p.tableName, table) >= 0)
+    new Lookup(user, catalog, db, table).of[DataMaskPolicy].hasNext
   }
 
   def getMaskType(name: String): Option[DataMaskType] = synchronized {
-    maskTypes.find(t => eq(t.name, name))
+    maskTypes.find(t => same(t.name, name))
   }
 
   /** Export every policy as one JSON document — the admin-tooling round trip
     * a Ranger-style external policy service would use.
     */
   def exportJson(): String = synchronized {
-    import org.json4s.JsonDSL._
+    import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val json =
-      ("rowFilters" -> rowFilters.toList.map(p =>
-        ("username" -> p.username) ~ ("catalogName" -> p.catalogName) ~
-          ("database" -> p.database) ~ ("tableName" -> p.tableName) ~
-          ("condition" -> p.condition) ~
-          ("validFrom" -> p.validFrom) ~ ("validUntil" -> p.validUntil))) ~
-      ("dataMasks" -> dataMasks.toList.map(p =>
-        ("username" -> p.username) ~ ("catalogName" -> p.catalogName) ~
-          ("database" -> p.database) ~ ("tableName" -> p.tableName) ~
-          ("columnName" -> p.columnName) ~ ("maskType" -> p.maskType) ~
-          ("validFrom" -> p.validFrom) ~ ("validUntil" -> p.validUntil))) ~
-      ("denies" -> denies.toList.map(p =>
-        ("username" -> p.username) ~ ("catalogName" -> p.catalogName) ~
-          ("database" -> p.database) ~ ("tableName" -> p.tableName) ~
-          ("validFrom" -> p.validFrom) ~ ("validUntil" -> p.validUntil))) ~
-      ("columnDenies" -> colDenies.toList.map(p =>
-        ("username" -> p.username) ~ ("catalogName" -> p.catalogName) ~
-          ("database" -> p.database) ~ ("tableName" -> p.tableName) ~
-          ("columnName" -> p.columnName) ~
-          ("validFrom" -> p.validFrom) ~ ("validUntil" -> p.validUntil))) ~
-      ("groups" -> groupMembers.toList.sortBy(_._1).map { case (g, members) =>
-        ("name" -> g) ~ ("members" -> members.toList.sorted) })
-    JsonMethods.compact(JsonMethods.render(json))
+    // a policy's fields in declaration order; an unset window is omitted
+    def fields(p: TablePolicy): JValue =
+      JObject(p.productElementNames.zip(p.productIterator).collect {
+        case (name, s: String) => name -> JString(s)
+        case (name, Some(s: String)) => name -> JString(s)
+      }.toList)
+    val groups = JArray(groupMembers.toList.sortBy(_._1).map { case (g, members) =>
+      JObject("name" -> JString(g), "members" -> JArray(members.toList.sorted.map(JString(_))))
+    })
+    JsonMethods.compact(JsonMethods.render(JObject(kinds.map { k =>
+      k.key -> JArray(policies.filter(k.cls.isInstance).map(fields).toList)
+    }.toList :+ ("groups" -> groups))))
   }
 
   /** Load policies from [[exportJson]] output, appending to the store.
@@ -416,36 +387,12 @@ final class PolicyManager {
       case JString(s) => Some(s)
       case _ => None
     }
-    val rfs = (root \ "rowFilters") match {
-      case JArray(items) => items.map(v => RowFilterPolicy(
-        str(v, "username"), str(v, "catalogName"), str(v, "database"),
-        str(v, "tableName"), str(v, "condition"),
-        optStr(v, "validFrom"), optStr(v, "validUntil")))
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"rowFilters must be an array, got $other")
-    }
-    val dms = (root \ "dataMasks") match {
-      case JArray(items) => items.map(v => DataMaskPolicy(
-        str(v, "username"), str(v, "catalogName"), str(v, "database"),
-        str(v, "tableName"), str(v, "columnName"), str(v, "maskType"),
-        optStr(v, "validFrom"), optStr(v, "validUntil")))
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"dataMasks must be an array, got $other")
-    }
-    val dns = (root \ "denies") match {
-      case JArray(items) => items.map(v => DenyRowPolicy(
-        str(v, "username"), str(v, "catalogName"), str(v, "database"),
-        str(v, "tableName"), optStr(v, "validFrom"), optStr(v, "validUntil")))
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"denies must be an array, got $other")
-    }
-    val cdns = (root \ "columnDenies") match {
-      case JArray(items) => items.map(v => ColumnDenyPolicy(
-        str(v, "username"), str(v, "catalogName"), str(v, "database"),
-        str(v, "tableName"), str(v, "columnName"),
-        optStr(v, "validFrom"), optStr(v, "validUntil")))
-      case JNothing => Nil
-      case other => throw new IllegalArgumentException(s"columnDenies must be an array, got $other")
+    val imported = kinds.flatMap { k =>
+      root \ k.key match {
+        case JArray(items) => items.map(v => k.read(str(v, _), optStr(v, _)))
+        case JNothing => Nil
+        case other => throw new IllegalArgumentException(s"${k.key} must be an array, got $other")
+      }
     }
     val grps = (root \ "groups") match {
       case JArray(items) => items.map { v =>
@@ -457,7 +404,29 @@ final class PolicyManager {
       }
       case _ => Nil
     }
-    synchronized { rowFilters ++= rfs; dataMasks ++= dms; denies ++= dns; colDenies ++= cdns }
+    synchronized { policies ++= imported }
     grps.foreach { case (g, members) => members.foreach(addUserToGroup(_, g)) }
   }
+}
+
+object PolicyManager {
+  /** A policy kind's JSON array name, class and reader (from required and
+    * optional field accessors), in export order.
+    */
+  private final case class Kind(key: String, cls: Class[_ <: TablePolicy],
+      read: (String => String, String => Option[String]) => TablePolicy)
+
+  private val kinds = Seq(
+    Kind("rowFilters", classOf[RowFilterPolicy], (s, o) => RowFilterPolicy(
+      s("username"), s("catalogName"), s("database"), s("tableName"),
+      s("condition"), o("validFrom"), o("validUntil"))),
+    Kind("dataMasks", classOf[DataMaskPolicy], (s, o) => DataMaskPolicy(
+      s("username"), s("catalogName"), s("database"), s("tableName"),
+      s("columnName"), s("maskType"), o("validFrom"), o("validUntil"))),
+    Kind("denies", classOf[DenyRowPolicy], (s, o) => DenyRowPolicy(
+      s("username"), s("catalogName"), s("database"), s("tableName"),
+      o("validFrom"), o("validUntil"))),
+    Kind("columnDenies", classOf[ColumnDenyPolicy], (s, o) => ColumnDenyPolicy(
+      s("username"), s("catalogName"), s("database"), s("tableName"),
+      s("columnName"), o("validFrom"), o("validUntil"))))
 }

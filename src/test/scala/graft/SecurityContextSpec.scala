@@ -151,6 +151,45 @@ class SecurityContextSpec extends SparkFunSuite {
       Seq(Seq(10001, "beijing"), Seq(10002, "beijing")))
   }
 
+  test("MASK_DATE_SHOW_YEAR on a TIMESTAMP column keeps the year, via the API and the extension") {
+    ctx // seeds the orders view
+    val sql = "SELECT order_id, order_date FROM orders ORDER BY order_id"
+    val yearOnly = "SELECT order_id, CAST(make_date(year(order_date), 1, 1) AS TIMESTAMP) " +
+      "FROM orders ORDER BY order_id"
+    val expected = spark.sql(yearOnly).collect().map(_.toSeq).toSeq
+    assert(expected.map(_(1)).distinct.size == 2) // 2020 and 2022
+    val c = new SecurityContext(spark, defaultCatalog = CAT, defaultDatabase = DB)
+    c.policyManager.addPolicy(DataMaskPolicy("user_ts", CAT, DB, "orders", "order_date",
+      "MASK_DATE_SHOW_YEAR"))
+    assert(c.mixedExecute("user_ts", sql, 100).map(_.toSeq) == expected)
+
+    // raw spark.sql on a session built with the extension, in a non-UTC
+    // session time zone: the mask must use the session's zone
+    import org.apache.spark.sql.SparkSession
+    import graft.plans.GraftSecurityExtensions
+    val policy = DataMaskPolicy("user_ts", "spark_catalog", "default", "orders", "order_date",
+      "MASK_DATE_SHOW_YEAR")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val sec = SparkSession.builder().master("local[4]")
+      .withExtensions(new GraftSecurityExtensions).getOrCreate()
+    try {
+      sec.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
+      val raw = spark.table("orders").select("order_id", "order_date")
+      sec.createDataFrame(java.util.Arrays.asList(raw.collect(): _*), raw.schema)
+        .createOrReplaceTempView("orders")
+      val expectedExt = sec.sql(yearOnly).collect().map(_.toSeq).toSeq
+      GraftSecurityExtensions.policies.addPolicy(policy)
+      sec.conf.set(GraftSecurityExtensions.UserKey, "user_ts")
+      assert(sec.sql(sql).collect().map(_.toSeq).toSeq == expectedExt)
+    } finally {
+      sec.conf.unset(GraftSecurityExtensions.UserKey)
+      GraftSecurityExtensions.policies.removePolicy(policy)
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("data mask: user_A sees MASK-ed customer_name (ExecuteDataMaskTest)") {
     assert(rows(ctx.executeDataMask("user_A", baseSql)) == Seq(
       Seq(10001, "Xxxx", 102, "beijing"),

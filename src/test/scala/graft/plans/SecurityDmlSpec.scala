@@ -102,6 +102,24 @@ class SecurityDmlSpec extends SparkFunSuite {
     assert(rowsOf("dml_msk").find(_._1 == 9L).map(_._2).contains("Xxxn"))
   }
 
+  test("MERGE from a denied source reads no source rows and audits the deny") {
+    val c = freshTarget("dml_dsrc")
+    spark.sql("DROP TABLE IF EXISTS graft_mem.default.dml_dsrc_src")
+    spark.sql("CREATE TABLE graft_mem.default.dml_dsrc_src (k BIGINT, seg STRING, bal BIGINT)")
+    spark.sql("INSERT INTO graft_mem.default.dml_dsrc_src VALUES (3,'A',333),(9,'C',900)")
+    c.policyManager.addPolicy(DenyRowPolicy(USER, "graft_mem", "default", "dml_dsrc_src"))
+    c.executeDml(USER,
+      """MERGE INTO graft_mem.default.dml_dsrc AS t
+        |USING graft_mem.default.dml_dsrc_src AS s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET bal = s.bal
+        |WHEN NOT MATCHED THEN INSERT (k, seg, bal) VALUES (s.k, s.seg, s.bal)""".stripMargin)
+    assert(rowsOf("dml_dsrc") ==
+      Seq((1L, "A", 10L), (2L, "B", 20L), (3L, "A", 30L), (4L, "B", 40L)))
+    val audit = c.auditLog.collect().map(r => (r.getString(2), r.getString(3), r.getString(4)))
+    assert(audit.count(_._1 == "ROW_DENY") == 1)
+    assert(audit.contains(("ROW_DENY", "graft_mem.default.dml_dsrc_src", "DENY")))
+  }
+
   test("a denied user's DML fails closed before planning") {
     val c = freshTarget("dml_deny")
     c.policyManager.addPolicy(DenyRowPolicy(USER, "graft_mem", "default", "dml_deny"))

@@ -453,4 +453,14 @@ class SqlGoldenSpec extends SparkFunSuite {
           "WHERE orders.region = 'beijing' AND p.name = 'hammer'")
     }
   }
+
+  test("a node the renderer has no text for fails with its name, not a stack overflow") {
+    withCtx(mixedPolicies) { c =>
+      val e = intercept[UnsupportedOperationException] {
+        c.mixedRewriteSql(USER_A,
+          "SELECT order_id FROM orders UNION ALL SELECT id FROM products")
+      }
+      assert(e.getMessage.contains("Union"))
+    }
+  }
 }
